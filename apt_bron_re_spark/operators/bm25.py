@@ -12,9 +12,10 @@ m = number of corpus documents, dl = \\b\\w+\\b token count of the doc.
 
 Spark mapping: dl is a native expression over docs; tf and df are classic
 partial+final hash aggregations; (m, avgdl) is a 1-row aggregate broadcast
-back via crossJoin — so the whole thing is two shuffles (tf keyed by
-(category,url,key); df keyed by (category,key)) and broadcast joins back.
-No Python in the hot path.
+back via crossJoin.  The globals (``bm25_global_stats``) and the scoring
+pass against them (``add_bm25_frozen_split``) are separate so chunked and
+streaming runs can score against globals frozen from a corpus snapshot;
+``add_bm25`` composes the two over one table.  No Python in the hot path.
 """
 
 from __future__ import annotations
@@ -45,6 +46,22 @@ def doc_lengths(docs: DataFrame) -> DataFrame:
     return docs.select("url", (collapsed - removed).cast("int").alias("dl"))
 
 
+def _bm25_key():
+    return F.lower(F.coalesce(F.col("original_id"), F.col("name"), F.lit("")))
+
+
+def _tf(scored: DataFrame) -> DataFrame:
+    """(category, url, bm25_key, f): term frequencies of the scored rows.
+
+    Computed on a NARROW projection — the wide mention rows (which carry
+    context sentences) are never shuffled for stat computation.  tf
+    counts hit entries after dedup, exactly like the reference counting
+    entries in the deduped hit files (statistics.py:37-40)."""
+    return (scored.select("category", "url", _bm25_key().alias("bm25_key"))
+            .groupBy("category", "url", "bm25_key")
+            .agg(F.count("*").alias("f")))
+
+
 def add_bm25(mentions: DataFrame, docs: DataFrame | None = None,
              k1: float = BM25_K1, b: float = BM25_B,
              labels: list[str] | None = None,
@@ -56,63 +73,17 @@ def add_bm25(mentions: DataFrame, docs: DataFrame | None = None,
     (statistics.py:36).  Pass ``dls(url, dl)`` when doc lengths were
     already computed upstream (the mention stage emits them for free);
     otherwise they are derived from ``docs(url, text)``.
-    """
-    labels = labels or BM25_LABELS
 
+    The single-table composition of ``bm25_global_stats`` and
+    ``add_bm25_frozen_split``: the globals come from ``mentions`` itself
+    and the two branches are unioned back.
+    """
     if dls is None:
         dls = doc_lengths(docs)
-
-    # 1-row corpus stats; broadcast-crossjoined (never a driver collect, so
-    # the plan stays lazy and resumable).
-    stats = dls.agg(
-        F.count("*").alias("m"),
-        F.avg("dl").alias("avgdl"),
-    )
-
-    scored = mentions.filter(F.col("category").isin(labels))
-    passthrough = mentions.filter(~F.col("category").isin(labels))
-
-    key_expr = F.lower(F.coalesce(F.col("original_id"), F.col("name"), F.lit("")))
-
-    # A3 stats on NARROW projections only — the wide mention rows (which
-    # carry context sentences) are never shuffled for stat computation.
-    # tf counts hit entries after dedup, exactly like the reference
-    # counting entries in the deduped hit files (statistics.py:37-40).
-    tf = (scored.select("category", "url", key_expr.alias("bm25_key"))
-          .groupBy("category", "url", "bm25_key")
-          .agg(F.count("*").alias("f")))
-    df_ = (tf.groupBy("category", "bm25_key")
-           .agg(F.count("*").alias("n")))          # tf is 1 row per (url,key)
-
-    score_table = (
-        tf.join(df_, ["category", "bm25_key"])
-        .join(dls, ["url"], "left")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("dl", F.coalesce(F.col("dl"), F.col("avgdl")))
-        .withColumn(
-            "idf",
-            F.log((F.col("m") - F.col("n") + 0.5) / (F.col("n") + 0.5) + 1.0))
-        .withColumn(
-            "denom",
-            F.col("f") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-        .select(
-            "category", "url", "bm25_key",
-            F.when(F.col("denom") != 0.0,
-                   F.round(F.col("idf") * (F.col("f") * (k1 + 1.0)) / F.col("denom"), 4))
-            .otherwise(F.lit(0.0)).alias("bm25_score"))
-    )
-
-    # ONE join attaches scores to the wide rows.  The score table scales
-    # with the data (1 row per distinct (doc, entity)) so it is shuffle-
-    # joined, not broadcast — broadcast builds are serial driver work.
-    out = (
-        scored.withColumn("bm25_key", key_expr)
-        .join(score_table, ["category", "url", "bm25_key"], "left")
-        .drop("bm25_key")
-    )
-
-    return out.unionByName(
-        passthrough.withColumn("bm25_score", F.lit(None).cast("double")))
+    stats, df_ = bm25_global_stats(mentions, dls, labels)
+    scored, passthrough = add_bm25_frozen_split(
+        mentions, dls, stats, df_, k1=k1, b=b, labels=labels)
+    return scored.unionByName(passthrough)
 
 
 def bm25_global_stats(mentions: DataFrame, dls: DataFrame,
@@ -122,15 +93,13 @@ def bm25_global_stats(mentions: DataFrame, dls: DataFrame,
     (per-partition incremental) scoring stays exact: naive per-chunk
     scoring would compute df/m/avgdl from the chunk and produce wrong idf.
 
-    Returns (stats, df_table): stats is the 1-row (m, avgdl); df_table is
-    (category, bm25_key, n) document frequencies."""
+    Returns (stats, df_table): stats is the 1-row (m, avgdl) — broadcast
+    back by a crossJoin, never a driver collect, so the plan stays lazy;
+    df_table is (category, bm25_key, n) document frequencies (tf is one
+    row per (url, key), so counting tf rows counts documents)."""
     labels = labels or BM25_LABELS
     stats = dls.agg(F.count("*").alias("m"), F.avg("dl").alias("avgdl"))
-    key_expr = F.lower(F.coalesce(F.col("original_id"), F.col("name"), F.lit("")))
-    tf = (mentions.filter(F.col("category").isin(labels))
-          .select("category", "url", key_expr.alias("bm25_key"))
-          .groupBy("category", "url", "bm25_key")
-          .agg(F.count("*").alias("f")))
+    tf = _tf(mentions.filter(F.col("category").isin(labels)))
     df_ = tf.groupBy("category", "bm25_key").agg(F.count("*").alias("n"))
     return stats, df_
 
@@ -140,7 +109,7 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
                           k1: float = BM25_K1, b: float = BM25_B,
                           labels: list[str] | None = None
                           ) -> tuple[DataFrame, DataFrame]:
-    """``add_bm25`` against FROZEN global stats, returning the scored and
+    """BM25 against FROZEN global stats, returning the scored and
     passthrough branches SEPARATELY (both with a ``bm25_score`` column;
     null on passthrough).  Exact on any url-subset of the corpus (tf and
     dl are url-local; df/m/avgdl come frozen), so an interrupted link
@@ -151,21 +120,17 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
     df/stats joins are broadcast, and the score join keys include url on
     both sides — so the whole scoring pass adds zero exchanges and the
     caller can keep the two branches separate (a union would erase the
-    partitioning, which is why the batch link stage unions only at the
-    very end — plans/pipeline.py build_linked)."""
+    partitioning, which is why the link stage unions only at the very
+    end — plans/pipeline.py ``link_stage``)."""
     labels = labels or BM25_LABELS
     scored = mentions.filter(F.col("category").isin(labels))
     passthrough = mentions.filter(~F.col("category").isin(labels))
-    key_expr = F.lower(F.coalesce(F.col("original_id"), F.col("name"), F.lit("")))
 
-    tf = (scored.select("category", "url", key_expr.alias("bm25_key"))
-          .groupBy("category", "url", "bm25_key")
-          .agg(F.count("*").alias("f")))
     score_table = (
         # dl attach is shuffle_hash too (round 4): both sides are narrow
         # and url-co-partitioned (zero exchange either way), but SMJ would
         # SORT both streams; hashing the one-row-per-url dl side is free.
-        tf.join(F.broadcast(df_table), ["category", "bm25_key"])
+        _tf(scored).join(F.broadcast(df_table), ["category", "bm25_key"])
         .join(dls.hint("shuffle_hash"), ["url"], "left")
         .crossJoin(F.broadcast(stats))
         .withColumn("dl", F.coalesce(F.col("dl"), F.col("avgdl")))
@@ -181,31 +146,22 @@ def add_bm25_frozen_split(mentions: DataFrame, dls: DataFrame,
                    F.round(F.col("idf") * (F.col("f") * (k1 + 1.0)) / F.col("denom"), 4))
             .otherwise(F.lit(0.0)).alias("bm25_score"))
     )
-    # shuffle_hash, not sort-merge: the LEFT stream is the wide mention
-    # rows (sentences) — an SMJ would SORT them, a per-partition O(n log n)
-    # pass over wide data that dominates link-stage CPU and thread-scales
-    # poorly (GC); the build side is the NARROW score table, whose
-    # per-partition hash build is bounded by rows/partitions at any scale.
-    # Under matching url partitioning the join stays exchange-free either
-    # way; the hint only removes the sorts.
+    # ONE join attaches scores to the wide rows.  shuffle_hash, not
+    # sort-merge: the LEFT stream is the wide mention rows (sentences) —
+    # an SMJ would SORT them, a per-partition O(n log n) pass over wide
+    # data that dominates link-stage CPU and thread-scales poorly (GC);
+    # the build side is the NARROW score table (1 row per distinct (doc,
+    # entity) — data-sized, so never broadcast), whose per-partition hash
+    # build is bounded by rows/partitions at any scale.  Under matching
+    # url partitioning the join stays exchange-free either way; the hint
+    # only removes the sorts.
     out = (
-        scored.withColumn("bm25_key", key_expr)
+        scored.withColumn("bm25_key", _bm25_key())
         .join(score_table.hint("shuffle_hash"),
               ["category", "url", "bm25_key"], "left")
         .drop("bm25_key")
     )
     return out, passthrough.withColumn("bm25_score", F.lit(None).cast("double"))
-
-
-def add_bm25_frozen(mentions: DataFrame, dls: DataFrame,
-                    stats: DataFrame, df_table: DataFrame,
-                    k1: float = BM25_K1, b: float = BM25_B,
-                    labels: list[str] | None = None) -> DataFrame:
-    """``add_bm25_frozen_split`` with the branches unioned back — the
-    standalone / chunked-incremental surface."""
-    out, passthrough = add_bm25_frozen_split(
-        mentions, dls, stats, df_table, k1=k1, b=b, labels=labels)
-    return out.unionByName(passthrough)
 
 
 def bm25_rank(scored: DataFrame) -> DataFrame:

@@ -251,15 +251,12 @@ def _attach_justification(agg: DataFrame, ev_sent: DataFrame,
         ev_sent.sentence.alias("justification"))
 
 
-def materialize_triples(ev: DataFrame,
-                        predicate_map: dict | None = None,
-                        max_sources: int = 64,
-                        n_salts: int = 16,
-                        partitions: int | None = None) -> DataFrame:
-    """evidence -> triples(subj, pred, obj, sources, n_sources,
-    justification, score).  ``ev`` is ``evidence_rows`` output (preferred —
-    lets the narrow branch prune sentences from its scan) or the
-    aggregated ``evidence`` table (the per-key aggregation is idempotent).
+def _salted_triples(ev: DataFrame, predicate_map: dict | None,
+                    max_sources: int, n_salts: int,
+                    partitions: int | None) -> DataFrame:
+    """The salted two-phase triple aggregation shared by
+    ``materialize_triples`` and ``partial_triples``: (subj, pred, obj,
+    sources, n_sources, bj, score, justification).
 
     Hub-entity skew handling (north_rule "salted skew handling"): at
     10^12-doc scale a hub edge's source set has millions of urls, so a
@@ -274,10 +271,11 @@ def materialize_triples(ev: DataFrame,
     Because the global k smallest urls are each among their own salt's k
     smallest, the result is EXACTLY the k smallest source urls —
     deterministic and bounded.  ``n_sources`` carries the exact distinct
-    source count (algebraic, skew-safe).  The best-justification argmax is
-    equally salted (max of a max is the max) and carries only the
-    evidence KEY; the sentence attaches at the end (module docstring).
-    """
+    source count (algebraic, skew-safe).  The best-justification argmax
+    ``bj`` is equally salted (max of a max is the max) and carries only
+    the evidence KEY; the sentence attaches at the end (module
+    docstring).  ``score`` is rounded to 4 places; rounding is monotone,
+    so a max over rounded partial scores is the rounded max."""
     predicate_map = predicate_map or PREDICATE_MAP
     pairs = _pairs(_narrow_evidence(ev, partitions), predicate_map)
 
@@ -306,7 +304,21 @@ def materialize_triples(ev: DataFrame,
             F.round(F.max("salt_score"), 4).alias("score"),
         )
     )
-    out = _attach_justification(agg, _evidence_sentences(ev))
+    return _attach_justification(agg, _evidence_sentences(ev))
+
+
+def materialize_triples(ev: DataFrame,
+                        predicate_map: dict | None = None,
+                        max_sources: int = 64,
+                        n_salts: int = 16,
+                        partitions: int | None = None) -> DataFrame:
+    """evidence -> triples(subj, pred, obj, sources, n_sources,
+    justification, score).  ``ev`` is ``evidence_rows`` output (preferred —
+    lets the narrow branch prune sentences from its scan) or the
+    aggregated ``evidence`` table (the per-key aggregation is idempotent).
+    The aggregation is ``_salted_triples`` (hub-skew salting there)."""
+    out = _salted_triples(ev, predicate_map, max_sources, n_salts,
+                          partitions)
     return out.select("subj", "pred", "obj", "sources", "n_sources",
                       "justification", "score")
 
@@ -317,8 +329,9 @@ def partial_triples(ev: DataFrame,
                     n_salts: int = 16,
                     partitions: int | None = None) -> DataFrame:
     """Chunk-local partial triple aggregate for merge-on-append incremental
-    materialization.  Because chunks partition the corpus BY URL, every
-    per-triple statistic here is mergeable exactly:
+    materialization — ``_salted_triples`` over the chunk.  Because chunks
+    partition the corpus BY URL, every per-triple statistic here is
+    mergeable exactly:
 
       part_sources  k-smallest urls within the chunk (the global k smallest
                     are each within their own chunk's k smallest)
@@ -328,43 +341,20 @@ def partial_triples(ev: DataFrame,
                     urls are chunk-disjoint, so the cross-chunk max can
                     never tie on (s, has_s, url) across chunks and the
                     payload never decides a comparison
-      part_score    max pair_score (rounded only at merge time)
+      part_score    max pair_score, rounded (max commutes with rounding)
     """
-    predicate_map = predicate_map or PREDICATE_MAP
-    pairs = _pairs(_narrow_evidence(ev, partitions), predicate_map)
-    per_salt = (
-        pairs
-        .withColumn("salt", F.pmod(F.crc32("url"), F.lit(n_salts)))
-        .groupBy("subj", "pred", "obj", "salt")
-        .agg(
-            F.slice(F.sort_array(F.collect_set("url")), 1, max_sources)
-             .alias("salt_sources"),
-            F.countDistinct("url").alias("salt_n"),
-            _bj().alias("bj"),
-            F.max("pair_score").alias("salt_score"),
-        )
-    )
-    agg = (
-        per_salt.groupBy("subj", "pred", "obj")
-        .agg(
-            F.slice(
-                F.array_sort(F.array_distinct(
-                    F.flatten(F.collect_list("salt_sources")))),
-                1, max_sources).alias("part_sources"),
-            F.sum("salt_n").alias("part_n"),
-            F.max("bj").alias("bj"),
-            F.max("salt_score").alias("part_score"),
-        )
-    )
-    with_j = _attach_justification(agg, _evidence_sentences(ev))
+    with_j = _salted_triples(ev, predicate_map, max_sources, n_salts,
+                             partitions)
     return with_j.select(
-        "subj", "pred", "obj", "part_sources", "part_n",
+        "subj", "pred", "obj",
+        F.col("sources").alias("part_sources"),
+        F.col("n_sources").alias("part_n"),
         F.struct(F.col("bj.s").alias("s"),
                  F.col("bj.has_s").alias("has_s"),
                  F.col("bj.url").alias("url"),
                  F.col("bj.subj_label").alias("subj_label"),
                  F.col("justification").alias("justification")).alias("part_bj"),
-        "part_score")
+        F.col("score").alias("part_score"))
 
 
 def merge_partial_triples(partials: DataFrame,
@@ -380,6 +370,8 @@ def merge_partial_triples(partials: DataFrame,
                 1, max_sources).alias("sources"),
             F.sum("part_n").alias("n_sources"),
             F.max("part_bj").getField("justification").alias("justification"),
+            # idempotent on rounded partials; still rounds partials
+            # written before partial_triples rounded
             F.round(F.max("part_score"), 4).alias("score"),
         )
         .select("subj", "pred", "obj", "sources", "n_sources",

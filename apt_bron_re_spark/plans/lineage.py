@@ -144,6 +144,21 @@ class LineageLog:
                 for b, n in bucket_counts.items()]
         self._append(rows)
 
+    def chunk_progress(self, stage: str, fp: str) -> tuple[set[int], float]:
+        """(buckets with a chunk row, sum of those chunks' walls) of an
+        incrementally-executed stage, from one lineage read.
+        ``record_buckets`` writes a chunk's wall on each of its bucket
+        rows under one ``completed_at``, so each chunk counts once."""
+        df = self._read()
+        if df is None:
+            return set(), 0.0
+        rows = (df.filter((F.col("stage") == stage)
+                          & (F.col("fingerprint") == fp)
+                          & (F.col("bucket") >= 0))
+                .select("bucket", "completed_at", "wall_s").collect())
+        chunks = {(r.completed_at, r.wall_s) for r in rows}
+        return {r.bucket for r in rows}, sum(w for _, w in chunks)
+
     def record_summary(self, stage: str, fp: str, n_rows: int,
                        wall_s: float) -> None:
         now = time.time()

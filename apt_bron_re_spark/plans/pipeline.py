@@ -5,12 +5,19 @@
 Each stage writes an idempotent parquet table under ``base_dir`` (bucketed
 by ``pbucket = pmod(murmur3(url), n_buckets)`` — exactly Spark's
 HashPartitioning partition id, so url-partitioned plans write with no
-extra shuffle; the parquet stand-in for Iceberg's ``bucket(url)``
-partition transform — a production deployment swaps the writer for
-``df.writeTo(...).partitionedBy(bucket(N, "url"))`` with zero logic
-changes) and appends per-bucket lineage rows.  ``run(resume=True)``
+extra shuffle; ``Pipeline(catalog=...)`` writes Iceberg tables
+identity-partitioned by the same column) and appends per-bucket lineage
+rows.  ``run(resume=True)``
 skips stages whose fingerprint already completed — kill the job at any
 stage boundary and re-running continues where it stopped.
+
+One builder per stage: ``Pipeline.run`` (each stage written whole), the
+bucket-chunked ``run_*_incremental`` methods (per-bucket resume) and the
+streaming micro-batch (streaming/kg_stream.py ``kg_batch_step``) build
+the mention stage with ``Pipeline._mentions``, the link stage with
+``link_stage`` and the triples with the operators/materialize.py salted
+aggregation; they differ only in where the BM25 globals come from and
+how the output is written.
 
 Stage-table layout (versioned stage tables replace the reference's
 in-place file rewrites — SURVEY.md §3):
@@ -37,7 +44,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import NER_MATCH_SCORE, SIM_THRESHOLD
+from ..config import BM25_LABELS, NER_MATCH_SCORE, SIM_THRESHOLD
 from ..operators import bm25, canonicalize, linking, materialize, mention
 from ..operators.extract import extract_docs
 from .lineage import LineageLog, fingerprint
@@ -49,6 +56,89 @@ from .lineage import LineageLog, fingerprint
 # (duplicated/missing rows).  A marker file pins the layout at first
 # write; a mismatched resume fails fast instead of mis-bucketing.
 LAYOUT_ID = "pbucket=pmod(murmur3_hash(url),n_buckets)"
+
+
+def bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
+    """Add ``pbucket`` (partition bucket) — distinct from the NER residue
+    "bucket" column of the mention stage table.  Defined as
+    pmod(murmur3(url), n) — EXACTLY Spark's HashPartitioning(url, n)
+    partition-id expression (same hash, same seed 42) — so a plan that is
+    repartition(n, url)-partitioned has pbucket-PURE partitions and can be
+    written partitionBy("pbucket") with no further shuffle (one file per
+    bucket dir per branch)."""
+    return df.withColumn(
+        "pbucket", F.pmod(F.hash(F.col("url")), F.lit(n_buckets)).cast("int"))
+
+
+def link_stage(stage: DataFrame, layer_map: dict[str, list[dict]],
+               n_buckets: int, semantic: bool = True,
+               threshold: float = SIM_THRESHOLD,
+               stats: DataFrame | None = None,
+               df_: DataFrame | None = None,
+               partitions: int | None = None
+               ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Stage 3 over a mention stage table (or any url-subset of it):
+    BM25 -> L2-L5 links -> L6 merge.  Returns (merged, residual, links),
+    the first two carrying ``pbucket``.  ``links`` is persisted because
+    merged and residual are usually written by separate jobs; the caller
+    unpersists it once both are written.
+
+    ``stats``/``df_``: the corpus-global BM25 inputs frozen from a corpus
+    snapshot (chunked and streaming runs — per-chunk globals would give
+    wrong idf).  When omitted they are computed inline from ``stage``,
+    which is exact only when ``stage`` is the whole corpus (batch run).
+
+    ``partitions``: the url repartition's partition count, default
+    ``n_buckets`` — the batch run's ``pre_partitioned`` write needs
+    pbucket-pure partitions, i.e. exactly ``n_buckets`` of them.  A
+    chunked or micro-batch caller holds only some pbuckets, so it passes
+    the session's shuffle partition count instead (its writer re-buckets
+    anyway) and keeps every core busy.
+
+    ONE url hash-partitioning for the whole stage: the stage TABLE is
+    repartitioned by url once and the three views are disjoint rec_type
+    filters above it, so ReuseExchange collapses the mention / residue /
+    doc-length subtrees onto a single shuffle.  The scored (wide) branch
+    preserves it: BM25 tf (groupBy keys include url), the df/stats joins
+    (broadcasts of catalog-bounded tables), the score join and the L6
+    merge join need no exchange of the mention rows, provided
+    ``partitions`` equals spark.sql.shuffle.partitions — the narrow
+    best-link aggregation shuffles to the session count, and on a
+    mismatch the merge join re-shuffles the mention rows on (url,
+    category, oid_l).  The residual branch is not exchange-free: the
+    anti-join against the best-link aggregate (hashed on url, label,
+    oid_l) re-shuffles the narrow mention keys.  The scored/passthrough
+    union comes last because a union erases partitioning, and a
+    ``pre_partitioned`` write needs no repartition because pbucket is the
+    partition id (``bucketed``).  The wide scored plan stays
+    single-consumer and un-persisted: the residual anti-join takes its
+    keys from a narrow pre-BM25 projection, and dl comes from the mention
+    stage's 'doc' rows — no text re-scan."""
+    st = stage.repartition(partitions or n_buckets, F.col("url"))
+    m = mention.mentions_view(st)
+    r = mention.residue_view(st)
+    dls = mention.doc_lengths_view(st)
+    if stats is None:
+        stats, df_ = bm25.bm25_global_stats(m, dls)
+    scored, passthrough = bm25.add_bm25_frozen_split(m, dls, stats, df_)
+
+    links = linking.build_links(
+        r, layer_map, semantic=semantic, threshold=threshold).persist()
+    keys = (m.select(
+        "url", "category",
+        F.lower(F.coalesce("original_id", F.lit(""))).alias("oid_l"))
+        .distinct())
+    # invariant check for the passthrough shortcut: every linkable label
+    # must be BM25-scored (true for the BRON-shaped catalog: links exclude
+    # the cpe family and cve is regex-only).
+    may_link = bool(
+        (set(layer_map) - linking.LINKED_LABELS_EXCLUDE) - set(BM25_LABELS))
+    merged_s, merged_p, residual = linking.merge_links_split(
+        scored, passthrough, links, mention_keys=keys,
+        passthrough_may_link=may_link)
+    merged = bucketed(merged_s, n_buckets).unionByName(
+        bucketed(merged_p, n_buckets))
+    return merged, bucketed(residual, n_buckets), links
 
 
 class Pipeline:
@@ -77,11 +167,12 @@ class Pipeline:
 
         ``catalog``: the Iceberg one-line swap (S7/S8 proper).  When set
         (e.g. ``"ice.db"``), every stage table becomes the Iceberg table
-        ``<catalog>.<name>`` written via ``writeTo(...).partitionedBy(
-        bucket(n_buckets, url))`` — the real partition transform the
-        parquet ``pbucket`` column emulates — and incremental chunks use
-        ``overwritePartitions()`` (Iceberg's native dynamic overwrite,
-        same exactly-once semantics as the parquet path).  Requires an
+        ``<catalog>.<name>`` written via ``writeTo(...)``, partitioned by
+        the same columns as the parquet tables (identity ``pbucket``, not
+        Iceberg's ``bucket(url)``, whose hash differs — _iceberg_writer),
+        and incremental chunks use ``overwritePartitions()`` (Iceberg's
+        native dynamic overwrite, same exactly-once semantics as the
+        parquet path).  Requires an
         Iceberg runtime on the session (tests/test_iceberg_optional.py
         runs the full pipeline this way when ``SPARK_ICEBERG_JAR`` is
         set; the sandbox has no jars, so it skips explicitly)."""
@@ -98,14 +189,14 @@ class Pipeline:
         self.log = LineageLog(spark, base_dir)
         self._catalog_fp = fingerprint(layer_map)
         self._record_threads: list = []   # deferred lineage-record scans
-        if not catalog:
-            self._check_layout()
+        self._check_layout()
 
     def _check_layout(self) -> None:
         """Pin the base_dir's bucket layout (LAYOUT_ID + n_buckets): a
         resume against a base_dir written under a different layout fails
-        fast instead of silently mixing bucket assignments.  Iceberg-mode
-        skips this — the bucket transform lives in table metadata."""
+        fast instead of silently mixing bucket assignments.  Iceberg mode
+        keeps its lineage here too and partitions by the same pbucket, so
+        the guard holds for both storages."""
         marker = self.base / "_layout.json"
         want = {"layout": LAYOUT_ID, "n_buckets": self.n_buckets}
         if marker.exists():
@@ -238,33 +329,28 @@ class Pipeline:
     def _path(self, name: str) -> str:
         return str(self.base / name)
 
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        # "pbucket" (partition bucket) — distinct from the NER residue
-        # "bucket" column of the mention stage table.  Defined as
-        # pmod(murmur3(url), n) — EXACTLY Spark's HashPartitioning(url, n)
-        # partition-id expression (same hash, same seed 42) — so a plan
-        # that is repartition(n, url)-partitioned has pbucket-PURE
-        # partitions and can be written partitionBy("pbucket") with no
-        # further shuffle (one file per bucket dir per branch).
-        return df.withColumn(
-            "pbucket", F.pmod(F.hash(F.col("url")), F.lit(self.n_buckets)).cast("int"))
+    def _iceberg_writer(self, df: DataFrame, name: str,
+                        partition_by: list[str] | None):
+        # identity partitions, pbucket included: Iceberg's bucket(N, url)
+        # transform hashes with murmur3 seed 0, pbucket with Spark's seed
+        # 42, so bucket(url) partitions would not line up with a chunk's
+        # pbuckets and a chunk's overwritePartitions() would replace rows
+        # of every other chunk.
+        w = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
+        if partition_by:
+            return w.partitionedBy(*[F.col(c) for c in partition_by])
+        return w
 
     def _write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
                pre_partitioned: bool = False) -> None:
         if self.catalog:
-            w = df.writeTo(f"{self.catalog}.{name}").using("iceberg")
-            if partition_by == ["pbucket"]:
-                # the REAL bucket transform the parquet pbucket emulates
-                w = w.partitionedBy(F.bucket(self.n_buckets, F.col("url")))
-            elif partition_by:
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()
+            self._iceberg_writer(df, name, partition_by).createOrReplace()
             return
         if pre_partitioned:
             # the builder guarantees the plan is already
             # HashPartitioning(url, n_buckets)-clustered (or a union of
             # such branches): every task holds exactly one pbucket value
-            # (see _bucketed), so partitionBy writes one file per dir per
+            # (see bucketed), so partitionBy writes one file per dir per
             # branch with NO write-side shuffle.
             pass
         elif partition_by == ["pbucket"]:
@@ -274,7 +360,7 @@ class Pipeline:
             # zstd parquet encode to 1-2 tasks — a data-sized SERIAL tail
             # that capped the link stage at ~1.3x on 4 cores (measured at
             # 256k pages; the encode is CPU-bound, not IO).  pbucket is
-            # uniform (pmod(murmur3(url), n) — see _bucketed), so pinning
+            # uniform (pmod(murmur3(url), n) — see bucketed), so pinning
             # loses no skew handling.
             df = df.repartition(self.n_buckets, F.col("pbucket"))
         elif partition_by:
@@ -363,15 +449,16 @@ class Pipeline:
         (narrow anti-join + small write), so overlapping it under the
         linked write removes a serial tail at higher parallelism while
         costing nothing at one thread.  The shared ``links`` subplan is
-        persisted by the builder; a cache race at worst duplicates that
-        narrow compute.  The lineage row is recorded only after BOTH
-        writes commit, preserving resume atomicity."""
+        persisted by the builder (a cache race at worst duplicates that
+        narrow compute) and unpersisted once both writes end.  The lineage
+        row is recorded only after BOTH writes commit, preserving resume
+        atomicity."""
         import threading
 
         if resume and self.log.is_complete("link", fp):
             return self._read("linked")
         t0 = time.time()
-        merged, residual = build()
+        merged, residual, links = build()
         err: list[BaseException] = []
 
         def _res() -> None:
@@ -388,6 +475,7 @@ class Pipeline:
                         pre_partitioned=True)
         finally:
             th.join()
+            links.unpersist()
         if err:
             raise err[0]
         out = self._read("linked")
@@ -429,16 +517,10 @@ class Pipeline:
             tbl = f"{self.catalog}.{name}"
             if self.spark.catalog.tableExists(tbl):
                 # Iceberg's native dynamic overwrite: replaces exactly the
-                # partitions the chunk touches — same exactly-once story
+                # chunk's pbucket partitions (_iceberg_writer)
                 df.writeTo(tbl).overwritePartitions()
             else:
-                w = df.writeTo(tbl).using("iceberg")
-                if partition_col == "pbucket":
-                    w = w.partitionedBy(
-                        F.bucket(self.n_buckets, F.col("url")))
-                else:
-                    w = w.partitionedBy(partition_col)
-                w.create()
+                self._iceberg_writer(df, name, [partition_col]).create()
             return
         (df.repartition(self.n_buckets, F.col(partition_col))
          .write.mode("overwrite")
@@ -446,18 +528,36 @@ class Pipeline:
          .partitionBy(partition_col)
          .parquet(self._path(name)))
 
+    def _mentions(self, src: DataFrame, from_html: bool) -> DataFrame:
+        """Stage-2 builder.  ``from_html``: ``src`` is pages and E1 runs
+        inside the mention UDF (lang filter here); otherwise ``src`` is
+        the extract stage's docs table (already lang-filtered)."""
+        if from_html:
+            if self.lang is not None:
+                src = src.filter(F.col("lang") == self.lang)
+            src = src.select("url", "html")
+        else:
+            src = src.drop("pbucket")
+        return bucketed(mention.detect_mentions(
+            src, self.layer_map, from_html=from_html), self.n_buckets)
+
     # -- stages -----------------------------------------------------------
     def run(self, pages: DataFrame, resume: bool = True) -> DataFrame:
+        """All five stages, each written whole, skipping stages whose
+        fingerprint already completed (``resume``).  Mention, link and
+        materialize use the same builders as the chunked ``run_*_incremental``
+        methods (``_mentions``, ``link_stage`` with inline BM25 globals,
+        ``materialize_triples``); returns the triples table."""
         # Batch stage-1/2 writes keep the pbucket COLUMN but skip the
         # bucketing repartition + partitionBy dirs: the mention UDF output
         # streams straight from the scan-aligned tasks into parquet — no
         # wide shuffle of sentence-bearing rows just to lay out dirs the
-        # batch path never prunes on.  (The link stage establishes its own
-        # url partitioning from the scan.)  The per-bucket layout matters
-        # only for chunked-incremental resume, whose own writers
-        # (run_mention_incremental/_write_buckets) still produce it; reads
-        # work identically on either layout because pbucket is a column
-        # filter there, with dir pruning as a bonus when dirs exist.
+        # batch path never prunes on.  (link_stage establishes its own url
+        # partitioning from the scan.)  The per-bucket layout matters
+        # only for chunked-incremental resume, whose writer
+        # (_write_buckets) produces it; reads work identically on either
+        # layout because pbucket is a column filter there, with dir
+        # pruning as a bonus when dirs exist.
         #
         # Canon overlap: stage 4 is CATALOG-derived (canonical_map never
         # reads the corpus), yet ran serially between link and
@@ -501,98 +601,30 @@ class Pipeline:
 
     def _run_body(self, pages: DataFrame, resume: bool,
                   canon_th, canon_box: dict) -> DataFrame:
-        fp0 = fingerprint(self._catalog_fp, self.lang, "extract")
-        if self.fuse_extract:
-            fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
-            filtered = (pages.filter(F.col("lang") == self.lang)
-                        if self.lang is not None else pages)
-            stage2 = self._run_stage(
-                "mention", fp1,
-                lambda: self._bucketed(mention.detect_mentions(
-                    filtered.select("url", "html"), self.layer_map,
-                    from_html=True)),
-                "mentions", resume=resume, record_async=True)
-        else:
-            docs = self._run_stage(
+        fp0, fp1, fp2, _fp3, fp4 = self._fps()
+        src = pages
+        if not self.fuse_extract:
+            src = self._run_stage(
                 "extract", fp0,
-                lambda: self._bucketed(extract_docs(pages, self.lang)),
+                lambda: bucketed(extract_docs(pages, self.lang),
+                                 self.n_buckets),
                 "docs", resume=resume)
+        stage2 = self._run_stage(
+            "mention", fp1, lambda: self._mentions(src, self.fuse_extract),
+            "mentions", resume=resume, record_async=True)
 
-            fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention")
-            stage2 = self._run_stage(
-                "mention", fp1,
-                lambda: self._bucketed(
-                    mention.detect_mentions(docs.drop("pbucket"), self.layer_map)),
-                "mentions", resume=resume, record_async=True)
-
-        fp2 = fingerprint(fp1, self.semantic, self.sim_threshold, "link")
-
-        def build_linked() -> DataFrame:
-            # ONE url hash-partitioning for the whole stage: mentions and
-            # residues are each repartitioned by url once, and every
-            # downstream operation preserves it — BM25 tf (groupBy keys
-            # include url), the df/stats joins (broadcast against frozen
-            # catalog-bounded tables), the score join, the best-link
-            # aggregation + dedup (keys include url), the L6 merge join,
-            # and the residual anti-join all run EXCHANGE-FREE.  The
-            # scored/passthrough union happens at the very END (a union
-            # erases partitioning info, which round 2 measured as the
-            # partitioning-destroying step), and the stage write needs no
-            # repartition because pbucket == the partition id (_bucketed).
-            # The wide scored plan stays SINGLE-CONSUMER and un-persisted:
-            # the residual anti-join takes its keys from a narrow pre-BM25
-            # projection; dl comes free from the mention stage's 'doc'
-            # rows — no text re-scan.
-            # ONE physical exchange for all three stage-table views
-            # (round 7, the r6 verdict's "share one exchange" item,
-            # measured +0.9 s): the views are disjoint rec_type filters
-            # over the same table, so repartitioning the TABLE once and
-            # filtering above it lets ReuseExchange collapse the
-            # mention/residue/doc-length subtrees onto a single shuffle
-            # (two scans + two exchanges before), and doc lengths come
-            # out url-co-partitioned for the score join as a bonus.
-            # Filters preserve the HashPartitioning(url), so every
-            # downstream exchange-free invariant (and the
-            # pre_partitioned write) holds unchanged.  A/B at sf1.0
-            # pages: link-compute noop 4.3/3.9 -> 3.0/3.1 s.
-            st = stage2.repartition(self.n_buckets, F.col("url"))
-            m = mention.mentions_view(st)
-            r = mention.residue_view(st)
-            dls = mention.doc_lengths_view(st)
-
-            # BM25 globals inline: df is catalog-bounded (its keys are
-            # catalog entity names), so it broadcasts — which keeps the
-            # tf stream's url partitioning intact — and its build subtree
-            # shares the url-repartition exchange with the main scored
-            # stream (ReuseExchange), so no extra pass over the wide
-            # table and no aux-table write jobs.  The chunked-incremental
-            # path (run_link_incremental) still freezes these to parquet,
-            # where cross-session exactness requires it.
-            stats, df_ = bm25.bm25_global_stats(m, dls)
-            scored, passthrough = bm25.add_bm25_frozen_split(
-                m, dls, stats, df_)
-
-            links = linking.build_links(
-                r, self.layer_map,
-                semantic=self.semantic, threshold=self.sim_threshold).persist()
-            keys = (m.select(
-                "url", "category",
-                F.lower(F.coalesce("original_id", F.lit(""))).alias("oid_l"))
-                .distinct())
-            # invariant check for the passthrough shortcut: every linkable
-            # label must be BM25-scored (true for the BRON-shaped catalog:
-            # links exclude the cpe family and cve is regex-only).
-            from ..config import BM25_LABELS
-            from ..operators.linking import LINKED_LABELS_EXCLUDE
-            may_link = bool(
-                (set(self.layer_map) - LINKED_LABELS_EXCLUDE)
-                - set(BM25_LABELS))
-            merged_s, merged_p, residual = linking.merge_links_split(
-                scored, passthrough, links, mention_keys=keys,
-                passthrough_may_link=may_link)
-            merged = self._bucketed(merged_s).unionByName(
-                self._bucketed(merged_p))
-            return merged, self._bucketed(residual)
+        # BM25 globals inline (link_stage without frozen stats): df is
+        # catalog-bounded (its keys are catalog entity names), so it
+        # broadcasts — which keeps the tf stream's url partitioning intact
+        # — and its build subtree shares the url-repartition exchange with
+        # the main scored stream (ReuseExchange), so no extra pass over the
+        # wide table and no aux-table write jobs.  The chunked path
+        # (run_link_incremental) freezes them to parquet instead, where
+        # cross-session exactness requires it.
+        def build_linked():
+            return link_stage(stage2, self.layer_map, self.n_buckets,
+                              semantic=self.semantic,
+                              threshold=self.sim_threshold)
 
         try:
             linked = self._run_link_stage(fp2, build_linked, resume=resume)
@@ -605,12 +637,10 @@ class Pipeline:
             canon_th.join()
         residual = self._read("links_residual")
 
-        fp3 = self._fp3()
         if "err" in canon_box:
             raise canon_box["err"]  # noqa: B904 — original stage error
         canon = canon_box["df"]
 
-        fp4 = fingerprint(fp2, fp3, "materialize")
         triples = self._run_stage(
             "materialize", fp4,
             lambda: materialize.materialize_triples(
@@ -624,85 +654,90 @@ class Pipeline:
         return self._read("triples")
 
     # -- per-partition incremental execution --------------------------------
+    def _pending_chunks(self, stage: str, fp: str, n_chunks: int
+                        ) -> tuple[list[list[int]], float]:
+        """The stage's pending bucket chunks, and the summed wall of the
+        chunks an earlier (interrupted) call already wrote."""
+        done, wall = self.log.chunk_progress(stage, fp)
+        pending = [b for b in range(self.n_buckets) if b not in done]
+        size = max(1, (self.n_buckets + n_chunks - 1) // n_chunks)
+        chunks = [pending[i:i + size] for i in range(0, len(pending), size)]
+        return chunks, wall
+
+    def _run_chunks(self, stage: str, fp: str, n_chunks: int,
+                    max_chunks: int | None, write_chunk) -> float | None:
+        """Write the stage's pending bucket chunks, one per-bucket lineage
+        checkpoint after each.  ``write_chunk(chunk)`` writes exactly-once
+        (``_write_buckets``) and returns {bucket: n_rows}.  Returns the sum
+        of all the stage's chunk walls, each chunk counted once, or None
+        when ``max_chunks`` (test hook to simulate interruption) stopped
+        it before the last chunk."""
+        chunks, wall = self._pending_chunks(stage, fp, n_chunks)
+        for i, chunk in enumerate(chunks):
+            if max_chunks is not None and i >= max_chunks:
+                return None
+            t0 = time.time()
+            counts = write_chunk(chunk)
+            dt = time.time() - t0
+            self.log.record_buckets(stage, fp, counts, dt)
+            wall += dt
+        return wall
+
+    def _chunk_counts(self, name: str, chunk: list[int]) -> dict[int, int]:
+        counts = {r["pbucket"]: r["n"] for r in
+                  self._read(name).filter(F.col("pbucket").isin(chunk))
+                  .groupBy("pbucket").agg(F.count("*").alias("n"))
+                  .collect()}
+        # buckets with zero rows still checkpoint
+        return {b: counts.get(b, 0) for b in chunk}
+
+    def _finish_chunks(self, stage: str, fp: str, name: str,
+                       chunk_wall: float, t0: float) -> None:
+        """Summary row of a chunked stage: the rows of its table, and as
+        wall its chunk walls plus the finishing step since ``t0``."""
+        n_rows = self._read(name).count()
+        self.log.record_summary(stage, fp, n_rows,
+                                chunk_wall + time.time() - t0)
+
     def run_mention_incremental(self, pages: DataFrame,
                                 n_chunks: int = 4,
                                 max_chunks: int | None = None) -> bool:
-        """Execute the (fused) mention stage in bucket-group chunks with a
+        """Execute the mention stage in bucket-group chunks with a
         per-bucket lineage checkpoint after each chunk — the north-star
-        resume mechanism: kill the job between chunks and a re-run
-        anti-joins the completed buckets out of the input and appends only
-        the missing ones.  Idempotence: a chunk's parquet files become
-        visible only at job commit, so a mid-chunk kill leaves no partial
-        rows.
+        resume mechanism: kill the job between chunks and a re-run skips
+        the completed buckets and rewrites only the missing ones.  E1 runs
+        inside the mention UDF (byte-identical to the extract stage), so
+        the rows equal either batch mode's.  Idempotence: dynamic
+        partition overwrite (``_write_buckets``), so a kill between a
+        chunk's commit and its lineage rows re-writes that chunk's buckets
+        instead of appending duplicates.
 
         ``max_chunks`` processes at most that many chunks (test hook to
         simulate interruption).  Returns True when the stage is complete
         (summary lineage row written).
         """
-        fp0 = fingerprint(self._catalog_fp, self.lang, "extract")
-        fp1 = fingerprint(fp0, NER_MATCH_SCORE, "mention", "fused")
+        _fp0, fp1, _fp2, _fp3, _fp4 = self._fps()
         if self.log.is_complete("mention", fp1):
             return True
+        src = bucketed(pages, self.n_buckets)
 
-        filtered = (pages.filter(F.col("lang") == self.lang)
-                    if self.lang is not None else pages)
-        filtered = filtered.withColumn(
-            "pbucket",
-            F.pmod(F.hash(F.col("url")), F.lit(self.n_buckets)).cast("int"))
+        def write_chunk(chunk: list[int]) -> dict[int, int]:
+            self._write_buckets(self._mentions(
+                src.filter(F.col("pbucket").isin(chunk)), from_html=True),
+                "mentions")
+            return self._chunk_counts("mentions", chunk)
 
-        done = self.log.completed_buckets("mention", fp1)
-        all_buckets = list(range(self.n_buckets))
-        pending = [b for b in all_buckets if b not in done]
-        chunk_size = max(1, (len(all_buckets) + n_chunks - 1) // n_chunks)
-        chunks = [pending[i:i + chunk_size]
-                  for i in range(0, len(pending), chunk_size)]
-
-        processed = 0
-        for chunk in chunks:
-            if max_chunks is not None and processed >= max_chunks:
-                return False
-            t0 = time.time()
-            part = filtered.filter(F.col("pbucket").isin(chunk))
-            out = mention.detect_mentions(
-                part.select("url", "html"), self.layer_map, from_html=True)
-            out = self._bucketed(out)
-            if self.catalog:
-                tbl = f"{self.catalog}.mentions"
-                if self.spark.catalog.tableExists(tbl):
-                    out.writeTo(tbl).append()
-                else:
-                    (out.writeTo(tbl).using("iceberg")
-                     .partitionedBy(F.bucket(self.n_buckets, F.col("url")))
-                     .create())
-            else:
-                (out.repartition(*[F.col("pbucket")])
-                 .write.mode("append").partitionBy("pbucket")
-                 .parquet(self._path("mentions")))
-            written = self._read("mentions").filter(
-                F.col("pbucket").isin(chunk))
-            counts = {r["pbucket"]: r["n"] for r in
-                      written.groupBy("pbucket")
-                      .agg(F.count("*").alias("n")).collect()}
-            # buckets with zero rows still checkpoint
-            for b in chunk:
-                counts.setdefault(b, 0)
-            self.log.record_buckets("mention", fp1, counts, time.time() - t0)
-            processed += 1
-
-        total = self._read("mentions").count()
-        self.log.record_summary("mention", fp1, total, 0.0)
+        wall = self._run_chunks("mention", fp1, n_chunks, max_chunks,
+                                write_chunk)
+        if wall is None:
+            return False
+        self._finish_chunks("mention", fp1, "mentions", wall, time.time())
         return True
-
-    def _pending_chunks(self, stage: str, fp: str, n_chunks: int
-                        ) -> list[list[int]]:
-        done = self.log.completed_buckets(stage, fp)
-        pending = [b for b in range(self.n_buckets) if b not in done]
-        size = max(1, (self.n_buckets + n_chunks - 1) // n_chunks)
-        return [pending[i:i + size] for i in range(0, len(pending), size)]
 
     def run_link_incremental(self, n_chunks: int = 4,
                              max_chunks: int | None = None) -> bool:
-        """Bucket-chunked link stage with per-bucket lineage resume.
+        """Bucket-chunked link stage (``link_stage`` per chunk) with
+        per-bucket lineage resume.
 
         The link stage consumes corpus-GLOBAL BM25 statistics (m, avgdl,
         df) — naive per-chunk scoring would compute wrong idf — so the
@@ -720,47 +755,38 @@ class Pipeline:
 
         aux_fp = fingerprint(fp2, "link_aux")
         if not self.log.is_complete("link_aux", aux_fp):
+            t0 = time.time()
             stats, df_ = bm25.bm25_global_stats(
                 mention.mentions_view(stage2),
                 mention.doc_lengths_view(stage2))
             self._write(stats, "link_aux_stats")
             self._write(df_, "link_aux_df")
-            self.log.record_summary("link_aux", aux_fp, 1, 0.0)
+            self.log.record_summary("link_aux", aux_fp, 1, time.time() - t0)
         stats = self._read("link_aux_stats")
         df_ = self._read("link_aux_df")
 
-        processed = 0
-        for chunk in self._pending_chunks("link", fp2, n_chunks):
-            if max_chunks is not None and processed >= max_chunks:
-                return False
-            t0 = time.time()
-            part = stage2.filter(F.col("pbucket").isin(chunk))
-            part_mentions = mention.mentions_view(part)
-            scored = bm25.add_bm25_frozen(
-                part_mentions,
-                mention.doc_lengths_view(part), stats, df_)
-            links = linking.build_links(
-                mention.residue_view(part), self.layer_map,
-                semantic=self.semantic, threshold=self.sim_threshold)
-            keys = (part_mentions.select(
-                "url", "category",
-                F.lower(F.coalesce("original_id", F.lit(""))).alias("oid_l"))
-                .distinct())
-            merged, residual = linking.merge_links(scored, links,
-                                                   mention_keys=keys)
-            self._write_buckets(merged, "linked")
-            self._write_buckets(self._bucketed(residual), "links_residual")
-            counts = {r["pbucket"]: r["n"] for r in
-                      self._read("linked").filter(F.col("pbucket").isin(chunk))
-                      .groupBy("pbucket").agg(F.count("*").alias("n"))
-                      .collect()}
-            for b in chunk:
-                counts.setdefault(b, 0)
-            self.log.record_buckets("link", fp2, counts, time.time() - t0)
-            processed += 1
+        # a chunk holds only len(chunk) of the n_buckets pbuckets, so a
+        # url repartition into n_buckets would leave the rest empty
+        n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
 
-        self.log.record_summary("link", fp2,
-                                self._read("linked").count(), 0.0)
+        def write_chunk(chunk: list[int]) -> dict[int, int]:
+            merged, residual, links = link_stage(
+                stage2.filter(F.col("pbucket").isin(chunk)), self.layer_map,
+                self.n_buckets, semantic=self.semantic,
+                threshold=self.sim_threshold, stats=stats, df_=df_,
+                partitions=n_part)
+            try:
+                self._write_buckets(merged, "linked")
+                self._write_buckets(residual, "links_residual")
+            finally:
+                links.unpersist()
+            return self._chunk_counts("linked", chunk)
+
+        wall = self._run_chunks("link", fp2, n_chunks, max_chunks,
+                                write_chunk)
+        if wall is None:
+            return False
+        self._finish_chunks("link", fp2, "linked", wall, time.time())
         return True
 
     def run_materialize_incremental(self, n_chunks: int = 4,
@@ -771,18 +797,14 @@ class Pipeline:
         mergeable because chunks partition the corpus by url), and the
         final merge reduces the partials into the triples table.  Identical
         output to single-shot materialize_triples (tested)."""
-        _fp0, _fp1, fp2, fp3, fp4 = self._fps()
+        _fp0, _fp1, _fp2, _fp3, fp4 = self._fps()
         if self.log.is_complete("materialize", fp4):
             return True
         linked = self._read("linked")
         residual = self._read("links_residual")
         canon = self._canon_stage(resume=True)
 
-        processed = 0
-        for chunk in self._pending_chunks("materialize", fp4, n_chunks):
-            if max_chunks is not None and processed >= max_chunks:
-                return False
-            t0 = time.time()
+        def write_chunk(chunk: list[int]) -> dict[int, int]:
             ev = materialize.evidence_rows(
                 linked.filter(F.col("pbucket").isin(chunk)),
                 residual.filter(F.col("pbucket").isin(chunk)),
@@ -793,14 +815,15 @@ class Pipeline:
                                 partition_col="chunk_key")
             n_part = self._read("triples_partial").filter(
                 F.col("chunk_key") == min(chunk)).count()
-            self.log.record_buckets(
-                "materialize", fp4, {b: n_part for b in chunk},
-                time.time() - t0)
-            processed += 1
+            return {b: n_part for b in chunk}
 
+        wall = self._run_chunks("materialize", fp4, n_chunks, max_chunks,
+                                write_chunk)
+        if wall is None:
+            return False
+        t0 = time.time()
         triples = materialize.merge_partial_triples(
             self._read("triples_partial").drop("chunk_key"))
         self._write(triples, "triples", partition_by=["pred"])
-        self.log.record_summary("materialize", fp4,
-                                self._read("triples").count(), 0.0)
+        self._finish_chunks("materialize", fp4, "triples", wall, t0)
         return True

@@ -5,10 +5,11 @@ Common-Crawl-scale deployment ingests pages continuously.  Two streaming
 execution shapes, both reusing the batch operators:
 
 1. **Exact micro-batch pipeline** (``run_kg_stream``): foreachBatch runs
-   the REAL stage 3-5 logic (BM25 scoring against FROZEN global stats,
-   variant+semantic linking, evidence, salted partial triple aggregation)
-   on every micro-batch and appends an exact partial aggregate partitioned
-   by ``batch_id``.  The partials merge associatively
+   the batch stage builders on every micro-batch — the link stage is
+   plans/pipeline.py ``link_stage`` (BM25 scoring against FROZEN global
+   stats, variant+semantic linking, L6 merge), then evidence and the
+   salted partial triple aggregation — and appends an exact partial
+   aggregate partitioned by ``batch_id``.  The partials merge associatively
    (operators/materialize.py ``partial_triples``/``merge_partial_triples``
    — correct because a page's url lives in exactly one micro-batch, the
    same url-disjointness that makes the batch incremental chunks exact),
@@ -19,9 +20,9 @@ execution shapes, both reusing the batch operators:
    mechanism as plans/pipeline.py ``_write_buckets``.
 
    The BM25 globals (m, avgdl, df) must be frozen from a corpus snapshot
-   — the same rule the batch incremental link stage follows
-   (plans/pipeline.py run_link_incremental): naive per-batch stats would
-   compute wrong idf.
+   — the same rule, and the same ``link_stage`` call, as the chunked link
+   stage (plans/pipeline.py run_link_incremental): naive per-batch stats
+   would compute wrong idf.
 
 2. **Live triple view** (``stream_evidence_pairs`` + ``stream_triples_live``):
    a fully streaming stateful rollup.  Per-document evidence pairing runs
@@ -69,9 +70,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..catalog.build import compile_catalog
 from ..config import PREDICATE_MAP
 from ..functions.extract_text import extract_text
-from ..operators import bm25, linking, materialize, mention
+from ..operators import materialize, mention
 from ..operators.canonicalize import canonical_map
 from ..operators.doc_core import NerTagger, process_document
+from ..plans.pipeline import link_stage
 
 PAIR_SCHEMA = T.StructType([
     T.StructField("subj", T.StringType(), False),
@@ -408,29 +410,26 @@ def kg_batch_step(pages_batch: DataFrame, batch_id: int,
                   semantic: bool = True,
                   threshold: float | None = None,
                   lang: str = "en") -> None:
-    """One exact micro-batch of stages 2-5: mention -> frozen-stats BM25 ->
-    link -> evidence -> PARTIAL triple aggregate, appended under
-    ``batch_id=<id>`` with dynamic partition overwrite (replaying the same
-    batch_id rewrites its partition — exactly-once)."""
+    """One exact micro-batch of stages 2-5: mention -> ``link_stage``
+    (frozen-stats BM25, link, L6 merge) -> evidence -> PARTIAL triple
+    aggregate, appended under ``batch_id=<id>`` with dynamic partition
+    overwrite (replaying the same batch_id rewrites its partition —
+    exactly-once).  The link stage's url repartition uses the session's
+    shuffle partition count."""
     from ..config import SIM_THRESHOLD
     threshold = SIM_THRESHOLD if threshold is None else threshold
 
     filtered = (pages_batch.filter(F.col("lang") == lang)
                 if lang is not None else pages_batch)
+    # persisted: the link stage's cached ``links`` subplan and the main
+    # plan would otherwise each run the mention UDF
     stage2 = mention.detect_mentions(
         filtered.select("url", "html"), layer_map, from_html=True).persist()
-    batch_mentions = mention.mentions_view(stage2)
-    scored = bm25.add_bm25_frozen(
-        batch_mentions,
-        mention.doc_lengths_view(stage2), stats, df_table)
-    links = linking.build_links(
-        mention.residue_view(stage2), layer_map,
-        semantic=semantic, threshold=threshold)
-    keys = (batch_mentions.select(
-        "url", "category",
-        F.lower(F.coalesce("original_id", F.lit(""))).alias("oid_l"))
-        .distinct())
-    merged, residual = linking.merge_links(scored, links, mention_keys=keys)
+    merged, residual, links = link_stage(
+        stage2, layer_map,
+        int(pages_batch.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions")),
+        semantic=semantic, threshold=threshold, stats=stats, df_=df_table)
     ev = materialize.evidence_rows(merged, residual, canon)
     part = (materialize.partial_triples(ev)
             .withColumn("batch_id", F.lit(int(batch_id))))
@@ -443,6 +442,7 @@ def kg_batch_step(pages_batch: DataFrame, batch_id: int,
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("batch_id")
      .parquet(out_path))
+    links.unpersist()
     stage2.unpersist()
 
 

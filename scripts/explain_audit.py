@@ -264,29 +264,18 @@ def main() -> None:
     import shutil
     import tempfile
 
-    from apt_bron_re_spark.operators import bm25 as _bm25
-    from apt_bron_re_spark.operators import linking as _linking
     from apt_bron_re_spark.operators import materialize as _mat
-    from apt_bron_re_spark.operators import mention as _mention
     from apt_bron_re_spark.plans.pipeline import Pipeline as _Pipeline
+    from apt_bron_re_spark.plans.pipeline import link_stage
 
     td = tempfile.mkdtemp(prefix="_audit_stage_")
     lm = build_layer_map()
     pipe = _Pipeline(spark, lm, td, n_buckets=8, fuse_extract=True)
     pipe.run(pages_df(spark, 80), resume=False)
-    stage2 = spark.read.parquet(f"{td}/mentions")
-    m = _mention.mentions_view(stage2).repartition(8, F.col("url"))
-    r = _mention.residue_view(stage2).repartition(8, F.col("url"))
-    dls = _mention.doc_lengths_view(stage2)
-    _stats_a, _df_a = _bm25.bm25_global_stats(m, dls)
-    scored, passthrough = _bm25.add_bm25_frozen_split(
-        m, dls, _stats_a, _df_a)
-    links = _linking.build_links(r, lm)
-    keys = m.select("url", "category", F.lower(
-        F.coalesce("original_id", F.lit(""))).alias("oid_l")).distinct()
-    ms_, mp_, _res = _linking.merge_links_split(
-        scored, passthrough, links, keys)
-    merged = pipe._bucketed(ms_).unionByName(pipe._bucketed(mp_))
+    # the link-stage builder Pipeline.run, the chunked resume and the
+    # streaming micro-batch all call — the plan audited is the plan run
+    merged, _res, _links = link_stage(
+        spark.read.parquet(f"{td}/mentions"), lm, 8)
     p = plan_of(merged)
     # a regression of subset co-partition reuse re-shuffles the score /
     # merge joins onto their FULL key sets — an exchange keyed on both

@@ -8,14 +8,14 @@ only input phase B needs).
 Phase B (per level, fresh JVM): read the mentions stage table and time
 the link stage's components separately:
 
-    scan_repart  mentions_view -> repartition(n, url) -> noop
-                 (the wide exchange alone: shuffle write + read of the
-                 sentence-bearing table)
+    scan_repart  mention stage table -> repartition(n, url) ->
+                 mentions_view -> noop (the wide exchange alone: shuffle
+                 write + read of the sentence-bearing table)
     aux_aggs     bm25_global_stats (1-row stats + df table) forced to
                  noop — the broadcast-build subtrees
     links_build  residue_view -> build_links (L2-L4) -> noop
-    full_noop    the whole build_linked composition (scored split,
-                 merge_links_split, union) -> noop for merged AND
+    full_noop    the whole link stage (plans/pipeline.py link_stage,
+                 the builder Pipeline.run calls) -> noop for merged AND
                  residual (serial forces)
     full_write   pipeline-shape writes: merged + residual to parquet
                  partitionBy(pbucket), concurrent jobs like
@@ -68,9 +68,9 @@ os.environ["SPARK_GRAFT_CPUS"] = str({cpus})
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 from apt_bron_re_spark.session import get_spark
 from apt_bron_re_spark.catalog.synthetic import build_layer_map
-from apt_bron_re_spark.config import BM25_LABELS, SIM_THRESHOLD
+from apt_bron_re_spark.config import SIM_THRESHOLD
 from apt_bron_re_spark.operators import bm25, linking, mention
-from apt_bron_re_spark.operators.linking import LINKED_LABELS_EXCLUDE
+from apt_bron_re_spark.plans.pipeline import link_stage
 from pyspark.sql import functions as F
 
 spark = get_spark("linkprofB", master="local[{cpus}]", shuffle_partitions=32)
@@ -95,15 +95,12 @@ def timed(fn):
     fn()
     return round(time.time() - t0, 2), round(steal() - s0, 1)
 
-def views():
-    m = mention.mentions_view(stage2).repartition(N, F.col("url"))
-    r = mention.residue_view(stage2).repartition(N, F.col("url"))
-    dls = mention.doc_lengths_view(stage2)
-    return m, r, dls
-
 res = {{"cpus": {cpus}}}
 
-m, r, dls = views()
+st = stage2.repartition(N, F.col("url"))
+m = mention.mentions_view(st)
+r = mention.residue_view(st)
+dls = mention.doc_lengths_view(st)
 res["scan_repart"] = timed(lambda: force(m))
 
 stats, df_ = bm25.bm25_global_stats(m, dls)
@@ -113,22 +110,9 @@ res["links_build"] = timed(lambda: force(linking.build_links(
     r, layer_map, semantic=True, threshold=SIM_THRESHOLD)))
 
 def build_linked():
-    m, r, dls = views()
-    stats, df_ = bm25.bm25_global_stats(m, dls)
-    scored, passthrough = bm25.add_bm25_frozen_split(m, dls, stats, df_)
-    links = linking.build_links(
-        r, layer_map, semantic=True, threshold=SIM_THRESHOLD).persist()
-    keys = (m.select("url", "category",
-                     F.lower(F.coalesce("original_id", F.lit("")))
-                     .alias("oid_l")).distinct())
-    may_link = bool((set(layer_map) - LINKED_LABELS_EXCLUDE)
-                    - set(BM25_LABELS))
-    merged_s, merged_p, residual = linking.merge_links_split(
-        scored, passthrough, links, mention_keys=keys,
-        passthrough_may_link=may_link)
-    pb = lambda df: df.withColumn(
-        "pbucket", F.pmod(F.hash(F.col("url")), F.lit(N)).cast("int"))
-    return pb(merged_s).unionByName(pb(merged_p)), pb(residual)
+    merged, residual, _links = link_stage(
+        stage2, layer_map, N, semantic=True, threshold=SIM_THRESHOLD)
+    return merged, residual
 
 def full_noop():
     merged, residual = build_linked()

@@ -46,6 +46,9 @@ def test_interrupt_and_resume_equals_single_shot(spark, layer_map,
     got = rows_of(spark.read.parquet(str(base_b / "mentions")))
     assert got == want
 
+    # the summary row carries the stage's real wall (sum of chunk walls)
+    assert _summary_wall(pb, "mention", _mention_fp(pb)) > 0
+
     # the stage is now complete: a further resume is a no-op
     lin_rows = pb.log.metrics().count()
     assert pb.run_mention_incremental(pages) is True
@@ -57,6 +60,46 @@ def test_interrupt_and_resume_equals_single_shot(spark, layer_map,
     ta = {(r.subj, r.pred, r.obj) for r in pa_triples.collect()}
     tb = {(r.subj, r.pred, r.obj) for r in triples_b.collect()}
     assert ta == tb
+
+
+def test_kill_between_commit_and_lineage_no_duplicates(spark, layer_map,
+                                                       tmp_path_factory):
+    """A failure after a chunk's data commits but before its lineage rows
+    land must not duplicate rows on resume: the chunk is re-run and its
+    buckets are overwritten, not appended (row COUNT, not just row set)."""
+    pages = pages_df(spark, N_PAGES)
+    base_a = tmp_path_factory.mktemp("kill_a")
+    pa = Pipeline(spark, layer_map, base_a, n_buckets=8, fuse_extract=True)
+    pa.run(pages)
+    want = spark.read.parquet(str(base_a / "mentions")).count()
+
+    base_b = tmp_path_factory.mktemp("kill_b")
+    pb = Pipeline(spark, layer_map, base_b, n_buckets=8, fuse_extract=True)
+    real = pb.log.record_buckets
+    calls = []
+
+    def fail_once(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("killed after the first chunk committed")
+        return real(*args, **kwargs)
+
+    pb.log.record_buckets = fail_once
+    with pytest.raises(RuntimeError, match="killed"):
+        pb.run_mention_incremental(pages, n_chunks=4)
+    assert spark.read.parquet(str(base_b / "mentions")).count() > 0
+    assert pb.log.completed_buckets("mention", _mention_fp(pb)) == set()
+
+    assert pb.run_mention_incremental(pages, n_chunks=4) is True
+    assert spark.read.parquet(str(base_b / "mentions")).count() == want
+
+
+def _summary_wall(pipe, stage, fp):
+    rows = (pipe.log.metrics()
+            .filter((F.col("stage") == stage) & (F.col("fingerprint") == fp)
+                    & (F.col("bucket") == -1)).collect())
+    assert len(rows) == 1
+    return rows[0].wall_s
 
 
 def _mention_fp(pipe):
@@ -100,6 +143,8 @@ def test_link_and_materialize_interrupt_resume(spark, layer_map,
            (tuple(sorted(r.sources)), r.n_sources, r.justification, r.score)
            for r in pb.triples().collect()}
     assert got == want
+    assert _summary_wall(pb, "link", fp2) > 0
+    assert _summary_wall(pb, "materialize", fp4) > 0
 
     # the full pipeline recognizes every stage as complete (no rebuild)
     lin_rows = pb.log.metrics().count()

@@ -223,3 +223,49 @@ def test_unmarked_base_dir_with_data_refused(spark, layer_map,
     (base / "mentions").mkdir()
     with pytest.raises(RuntimeError, match="_layout.json"):
         Pipeline(spark, layer_map, base, n_buckets=8)
+
+
+def test_link_stage_plan_one_url_partitioning(spark, layer_map):
+    """The shared link-stage builder's physical plan on a small in-memory
+    mention table: one pinned url repartition feeding shuffle-hash joins,
+    the scored/passthrough union at the end, and no exchange keyed on
+    both category and url (a full-key reshuffle of the score or merge
+    join would mean the url partitioning was lost)."""
+    import contextlib
+    import io
+    import re
+
+    from apt_bron_re_spark.operators.mention import MENTION_SCHEMA
+    from apt_bron_re_spark.plans.pipeline import link_stage
+
+    def row(url, rec_type, category=None, name=None, original_id=None,
+            value=None, index=None, sentence=None, bucket=None):
+        return (url, rec_type, category, name, original_id, value, index,
+                None, None, None, None, None,
+                0.5 if rec_type == "mention" else None, sentence, bucket)
+
+    stage = spark.createDataFrame([
+        row("u1", "doc", index=12),
+        row("u1", "mention", "group", "APT1", "G0006", "apt1", 3, "s1"),
+        row("u1", "mention", "cve", None, None, "CVE-2020-0001", 5, "s2"),
+        row("u1", "residue", value="comment crew", bucket="group"),
+        row("u2", "doc", index=7),
+        row("u2", "mention", "technique", "Phishing", "T1566", "phishing",
+            1, "s3"),
+    ], MENTION_SCHEMA)
+    # n_buckets == spark.sql.shuffle.partitions, as in every pipeline
+    # session: the best-link aggregation's exchange uses the session
+    # count, and a mismatch re-shuffles the mention rows on full keys
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    merged, _residual, links = link_stage(stage, layer_map, n)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        merged.explain("formatted")
+    links.unpersist()
+    plan = buf.getvalue()
+
+    for marker in ("REPARTITION_BY_NUM", "ShuffledHashJoin", "Union"):
+        assert marker in plan, marker
+    keys = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+    assert keys, "no hash exchange in the link-stage plan"
+    assert not [k for k in keys if "category#" in k and "url#" in k], keys
